@@ -257,7 +257,7 @@ BASELINE_REFREEZE = {
     # run 14 (.new13, 0.342):
     "corpus_mixture_plan": 0.342,
     # ---- r16 OPTIMIZATION-PHASE deliberate-engine-change re-bases:
-    # the literal-matrix plan compaction (similarity._lit_mat,
+    # the literal-matrix plan compaction (similarity.lit_matrix,
     # OPTIMIZATION_r16.md change 1) removed the Catalyst planning of
     # dim x k separate literal nodes that every registry call re-paid
     # on the PQ/IVF serving paths — results bit-identical (17/17

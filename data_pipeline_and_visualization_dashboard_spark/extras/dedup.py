@@ -3691,12 +3691,16 @@ def dedup_snapshot_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     _shutil.rmtree(base, ignore_errors=True)  # legacy fixed-key dir
     work = _tempfile.mkdtemp(prefix=_os.path.basename(base) + "_")
     in_dir = _os.path.join(work, "cdc_in")
-    sd = _os.path.join(work, "sd")
+    state, deltas, ckpt = (
+        _os.path.join(work, d) for d in ("state", "deltas", "ckpt")
+    )
     batch1 = docs.filter(F.col("doc_id") % 3 != 0).selectExpr(
         "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
     )
     batch1.coalesce(1).write.parquet(in_dir, mode="append")
-    _streaming.run_snapshot_diff_to_completion(spark, in_dir, sd)
+    _streaming.drain(
+        _streaming.snapshot_diff_stream(spark, in_dir, state, deltas, ckpt)
+    )
     batch2 = (
         docs.filter(F.col("doc_id") % 3 == 0)
         .selectExpr("doc_id AS seq", "doc_id", "text", "'upsert' AS op")
@@ -3730,9 +3734,10 @@ def dedup_snapshot_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = _streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, sd
+    _streaming.drain(
+        _streaming.snapshot_diff_stream(spark, in_dir, state, deltas, ckpt)
     )
+    ledger = _streaming.read_snapshot_deltas(spark, deltas)
     return ledger.select(
         "epoch", "status",
         F.col("n_docs").cast("bigint").alias("n_docs"),

@@ -25,6 +25,8 @@ set identical in both engines (SURVEY §7.4 #7/#10).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -72,23 +74,23 @@ def lit_matrix(rows) -> Column:
     reproduces exactly (tested down to 5e-324); the parsed
     CreateArray tree constant-folds to the same nested Literal, so
     the physical plan keeps the r16 pinned zip_with/transform shape.
-    Callers pass finite floats only (seeded matrices / trained
-    centroids); inf/nan have no SQL literal spelling and would fail
-    the parse loudly, not silently.
+    inf/nan have no SQL literal spelling, so a non-finite element
+    raises ValueError naming its row and column (ADVICE r17) instead
+    of failing deep inside sqlParser.
 
     Public per ADVICE r16 #4 (queries_ext._centroid_sim_structs is a
-    second consumer); `_lit_mat` stays as a compatibility alias."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(v)!r}D" for v in row) + ")"
-            for row in rows
-        )
-        + ")"
-    )
-
-
-_lit_mat = lit_matrix
+    second consumer)."""
+    rendered = []
+    for i, row in enumerate(rows):
+        vals = [float(v) for v in row]
+        for j, v in enumerate(vals):
+            if not math.isfinite(v):
+                raise ValueError(
+                    f"lit_matrix element at row {i}, column {j} is "
+                    f"{v!r}; only finite values have a SQL literal"
+                )
+        rendered.append("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
+    return F.expr("array(" + ",".join(rendered) + ")")
 
 
 def _with_norm(df: DataFrame, prefix: str) -> DataFrame:
@@ -153,7 +155,7 @@ def _bucket_expr(e: Column, planes) -> Column:
     weights = F.lit([1 << i for i in range(len(planes))])
     return F.aggregate(
         F.zip_with(
-            _lit_mat(planes),
+            lit_matrix(planes),
             weights,
             lambda p, w: F.when(_dot(e, p) >= 0, w).otherwise(F.lit(0)),
         ),
@@ -545,7 +547,7 @@ def rp_project(emb: DataFrame) -> DataFrame:
     e = F.col("embedding").cast("array<double>")
     # transform over ONE nested matrix literal (RP_DIM×dim) — same
     # per-row folds in the same order, a fraction of the plan nodes
-    proj = F.transform(_lit_mat(mat), lambda row: _dot(e, row))
+    proj = F.transform(lit_matrix(mat), lambda row: _dot(e, row))
     return emb.select("vec_id", proj.alias("p"))
 
 
@@ -1073,7 +1075,7 @@ def _pq_with_dls(unit: DataFrame, cents) -> DataFrame:
     dl values are bit-identical to the old per-code expression and to
     DuckDB's list_dot_product, only the plan SHAPE changed: one
     zip_with over two literals per block instead of 16 separate
-    CreateArray(16 lits) + fold trees (the _lit_mat plan-size
+    CreateArray(16 lits) + fold trees (the lit_matrix plan-size
     discipline — PQ planning was ~2-3 s of every registry call)."""
     cols = []
     for b in range(PQ_BLOCKS):
@@ -1085,7 +1087,7 @@ def _pq_with_dls(unit: DataFrame, cents) -> DataFrame:
             + ",".join(f"{float(_pq_cnorm(c))!r}D" for c in cents[b])
             + ")"
         )
-        cb = _lit_mat(cents[b])
+        cb = lit_matrix(cents[b])
         cols.append(
             F.zip_with(
                 cnorms, cb, lambda n, c: n - F.lit(2.0) * _dot(sl, c)

@@ -1040,7 +1040,7 @@ def _centroid_sim_structs(centroids: list[tuple[int, list[float]]]):
     Plan shape: ONE zip_with over two literals (the k×dim centroid
     matrix and the k ncid ints) instead of k separate
     struct(CreateArray(dim lits) + fold) trees — the similarity
-    family's _lit_mat plan-size discipline (Catalyst planning of the
+    family's lit_matrix plan-size discipline (Catalyst planning of the
     wide form dominated every per-call cost; OPTIMIZATION_r16.md).
     Same left-fold dot in the same centroid order ⇒ bit-identical
     sims, identical (sim, ncid) lexicographic argmax."""
@@ -1452,7 +1452,7 @@ def sim_ivfpq_topk_pretrained(spark: SparkSession,
     The steady-state serving cost of the billion-scale stack; the
     once-dominant per-call Catalyst planning of the codebook/centroid
     literal trees was cut ~3x by the r16 nested-literal compaction
-    (similarity._lit_mat, OPTIMIZATION_r16.md change 1)."""
+    (similarity.lit_matrix, OPTIMIZATION_r16.md change 1)."""
     assign, codes, _ = ann_disk_index(spark, sf_dir)
     return sim_ivfpq_topk(
         spark, sf_dir,

@@ -1,4 +1,4 @@
-"""Validation operators (SURVEY §2.2 V1-V5).
+"""Validation operators (SURVEY §2.2 V1-V3, V5; V4 is not carried).
 
 The reference fail-stops on schema violations (`validate_data`,
 assignment1.ipynb:70-80) and prints removal accounting per cleaning step
@@ -42,15 +42,6 @@ def validate_schema(
 def shape(df: DataFrame) -> tuple[int, int]:
     """V3: (rows, cols) summary (ipynb:83-89). One job."""
     return df.count(), len(df.columns)
-
-
-def null_counts(df: DataFrame) -> dict[str, int]:
-    """V4: per-column null count (ipynb:167) — single-pass multi-agg,
-    not a count() per column."""
-    row = df.select(
-        [F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in df.columns]
-    ).first()
-    return row.asDict()
 
 
 def accounting_aggs(rules: dict[str, Column]) -> list[Column]:

@@ -220,6 +220,17 @@ def test_pandas_cosine_matches_builtin(spark):
     assert ka == kb
 
 
+def test_lit_matrix_rejects_non_finite(spark):
+    """Finite matrices round-trip exactly (denormals included); a NaN
+    or inf element raises a ValueError naming its row and column
+    before any SQL is parsed."""
+    m = [[0.5, -1.25], [5e-324, 3.0]]
+    assert spark.range(1).select(similarity.lit_matrix(m)).first()[0] == m
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="row 1, column 0"):
+            similarity.lit_matrix([[0.5, -1.25], [bad, 3.0]])
+
+
 def test_media_feature_plumbing(spark):
     docs = read_table(spark, SF_SMOKE, "documents", ["doc_id", "text"])
     out = multimodal.extract_media_features(

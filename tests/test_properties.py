@@ -294,9 +294,10 @@ def test_snapshot_diff_matches_model(spark, batches, tmp_path_factory):
             p = os.path.join(in_dir, f)
             if f.endswith(".parquet") and os.path.getmtime(p) > base + k:
                 os.utime(p, (base + k, base + k))
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    streaming.drain(streaming.snapshot_diff_stream(
+        spark, in_dir, work + "/state", work + "/deltas", work + "/ckpt"
+    ))
+    ledger = streaming.read_snapshot_deltas(spark, work + "/deltas")
     got = {
         (r.epoch, r.status): (r.n_docs, r.n_chars)
         for r in ledger.collect()

@@ -192,6 +192,19 @@ def test_binned_gini_accuracy_envelope(spark):
         assert g - gb <= 0.02, (nation, gb, g)
 
 
+def _assert_oracles_nonempty(duck, names):
+    oracle = entrymod.oracle_sql()
+    empty = [
+        n for n in names
+        if n not in VACUOUS_WHITELIST
+        and len(duck.execute(oracle[n]).fetchall()) == 0
+    ]
+    assert not empty, (
+        f"vacuously-green oracle queries (0 rows at {SF_CORRECT}): {empty}; "
+        "fix the query or whitelist with a justification"
+    )
+
+
 def test_no_vacuously_green_oracles(duck):
     """Every oracle-backed query must return >=1 row at SF_CORRECT.
 
@@ -202,16 +215,17 @@ def test_no_vacuously_green_oracles(duck):
     differential test already pins spark_rows == duck_rows, so a
     non-empty oracle forces a non-empty Spark result too.
     """
-    empty = []
-    for name, sql in entrymod.oracle_sql().items():
-        if name in VACUOUS_WHITELIST:
-            continue
-        if len(duck.execute(sql).fetchall()) == 0:
-            empty.append(name)
-    assert not empty, (
-        f"vacuously-green oracle queries (0 rows at {SF_CORRECT}): {empty}; "
-        "fix the query or whitelist with a justification"
-    )
+    _assert_oracles_nonempty(duck, entrymod.oracle_sql())
+
+
+def test_no_vacuously_green_oracles_check_first(duck):
+    """Fast-tier variant of test_no_vacuously_green_oracles over the
+    driver's correctness window (`_CHECK_FIRST`) only, so a vacuous
+    oracle in the window fails the default tier too."""
+    oracle = entrymod.oracle_sql()
+    window = [n for n in entrymod._CHECK_FIRST if n in oracle]
+    assert window  # the window holds oracle-backed entries
+    _assert_oracles_nonempty(duck, window)
 
 
 def test_readme_counts_match_registry():

@@ -26,8 +26,32 @@ def _split_by_median_ts(raw, in_dir):
     raw.filter(us > cut).coalesce(1).write.parquet(in_dir, mode="append")
 
 
+def _settle(q):
+    """Process everything the running query's source holds WITHOUT
+    stopping it: for the tests that land more input mid-run, where
+    streaming.drain (which stops the query) would end the run."""
+    q.processAllAvailable()
+
+
+def _file_sink(stream_df, out_dir, ckpt):
+    """Start an append-mode parquet sink on a checkpoint — the shape
+    the restart pins stop and then resume on the same checkpoint."""
+    return (
+        stream_df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+
+
 def test_stream_matches_batch(spark):
-    stream_out = streaming.run_to_completion(spark, SF_SMOKE)
+    stream_out, _ = streaming.drain_to_memory(
+        streaming.windowed_event_counts(
+            streaming.read_event_stream(spark, SF_SMOKE)
+        ),
+        "complete",
+    )
     batch_out = q13_windowed_counts(spark, SF_SMOKE)
     s = {
         (r.window_start, r.event_type): (r.event_cnt, r.value_sum)
@@ -62,9 +86,12 @@ def test_native_session_windows_match_batch(spark, tmp_path):
 
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in streaming.run_native_sessions_to_completion(
-            spark, in_dir
-        ).collect()
+        for r in streaming.drain_to_memory(
+            streaming.sessionize_stream_native(
+                streaming.read_event_files(spark, in_dir)
+            ),
+            "append",
+        )[0].collect()
     }
     batch = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
@@ -98,9 +125,12 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
 
     streamed = {
         (r.user_id, r.purchase_id, r.view_id)
-        for r in streaming.run_view_purchase_join_to_completion(
-            spark, in_dir
-        ).collect()
+        for r in streaming.drain_to_memory(
+            streaming.view_purchase_join_stream(
+                streaming.read_event_files(spark, in_dir)
+            ),
+            "append",
+        )[0].collect()
     }
     events = read_table(spark, SF_SMOKE, "events")
     batch = {
@@ -118,13 +148,16 @@ def test_stream_to_parquet_roundtrip(spark, tmp_path):
     complete-mode output IS the answer)."""
     out_dir = str(tmp_path / "sink_out")
     ckpt = str(tmp_path / "sink_ckpt")
-    q = streaming.stream_to_parquet(spark, SF_SMOKE, out_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.stream_to_parquet(spark, SF_SMOKE, out_dir, ckpt)
+    )
     sunk = spark.read.parquet(out_dir)
-    mem = streaming.run_to_completion(spark, SF_SMOKE, "sink_parity")
+    mem, _ = streaming.drain_to_memory(
+        streaming.windowed_event_counts(
+            streaming.read_event_stream(spark, SF_SMOKE)
+        ),
+        "complete",
+    )
     s = {
         (r.window_start, r.event_type): (r.event_cnt, r.value_sum)
         for r in sunk.collect()
@@ -154,7 +187,12 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     raw.filter("event_id >= 300").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    out = streaming.run_dedup_to_completion(spark, in_dir)
+    out, _ = streaming.drain_to_memory(
+        streaming.dedup_event_stream(
+            streaming.read_event_files(spark, in_dir)
+        ),
+        "append",
+    )
     assert out.count() == events.count()  # every id exactly once
     assert out.select("event_id").distinct().count() == events.count()
 
@@ -175,7 +213,12 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
 
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in streaming.run_sessionize_to_completion(spark, in_dir).collect()
+        for r in streaming.drain_to_memory(
+            streaming.sessionize_stream(
+                streaming.read_event_files(spark, in_dir)
+            ),
+            "append",
+        )[0].collect()
     }
 
     # batch oracle: assign sessions with the q16 window spelling, then
@@ -220,13 +263,15 @@ def test_streaming_curation_equals_batch_histogram(spark):
     from data_pipeline_and_visualization_dashboard_spark.extras.text import (
         quality_filter,
     )
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_curation_to_completion,
-    )
 
     stream = {
         (r.verdict, r.doc_cnt)
-        for r in run_curation_to_completion(spark, SF_SMOKE).collect()
+        for r in streaming.drain_to_memory(
+            streaming.curation_stats_stream(
+                streaming.read_document_stream(spark, SF_SMOKE)
+            ),
+            "complete",
+        )[0].collect()
     }
     batch = {
         (r.verdict, r.doc_cnt)
@@ -256,13 +301,9 @@ def test_streaming_upsert_state_matches_batch_cdc(spark, tmp_path):
         in_dir, mode="append"
     )
     state_dir = str(tmp_path / "state")
-    q = streaming.upsert_state_stream(
+    streaming.drain(streaming.upsert_state_stream(
         spark, in_dir, state_dir, str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     got = sorted(
         tuple(r) for r in spark.read.parquet(state_dir)
         .select("user_id", "last_event_id", "last_ts",
@@ -289,11 +330,18 @@ def test_streaming_rollup_merge_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
     in_dir = str(tmp_path / "rollup_in")
     _split_by_median_ts(raw, in_dir)
+    state = str(tmp_path / "rollup_state")
+    streaming.drain(streaming.rollup_merge_stream(
+        spark, in_dir, state, str(tmp_path / "rollup_ckpt")
+    ))
     got = {
         (r.event_date, r.event_type): r
-        for r in streaming.run_rollup_merge_to_completion(
-            spark, in_dir, str(tmp_path / "rollup_state"),
-            str(tmp_path / "rollup_ckpt")
+        for r in spark.read.parquet(state).select(
+            "event_date",
+            "event_type",
+            "n_events",
+            F.round("sv", 6).alias("sum_value"),
+            F.round(F.col("sv") / F.col("n_events"), 6).alias("avg_value"),
         ).collect()
     }
     want = {
@@ -312,16 +360,26 @@ def test_stream_static_enrichment_matches_batch(spark):
     """Stream-static broadcast join: the windowed per-nation counts
     from the stream must equal the batch q58 rollup row-exactly — the
     static side is stateless, so nothing is late/dropped."""
+    from data_pipeline_and_visualization_dashboard_spark.io import read_table
     from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
         q58_event_nation_counts,
     )
 
-    got = sorted(
-        (r.hour, r.nation, r.n_events)
-        for r in streaming.run_enriched_counts_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+    cust = read_table(spark, SF_SMOKE, "customer",
+                      ["c_custkey", "c_nationkey"])
+    nation = read_table(spark, SF_SMOKE, "nation", ["n_nationkey", "n_name"])
+    dim = cust.join(
+        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
+    ).select(
+        F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation")
     )
+    out, _ = streaming.drain_to_memory(
+        streaming.enriched_nation_counts_stream(
+            streaming.read_event_stream(spark, SF_SMOKE), dim
+        ),
+        "complete",
+    )
+    got = sorted((r.hour, r.nation, r.n_events) for r in out.collect())
     want = sorted(
         (r.hour, r.nation, r.n_events)
         for r in q58_event_nation_counts(spark, SF_SMOKE).collect()
@@ -348,19 +406,11 @@ def test_streaming_rollup_survives_restart_without_double_merge(
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.rollup_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.rollup_merge_stream(spark, in_dir, state, ckpt))
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.rollup_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.rollup_merge_stream(spark, in_dir, state, ckpt))
     got = {
         (r.event_date, r.event_type): r.n_events
         for r in spark.read.parquet(state).collect()
@@ -457,9 +507,12 @@ def test_streaming_bloom_bits_match_batch(spark):
 
     got = sorted(
         (r.bit, r.n_inserts)
-        for r in streaming.run_bloom_stream_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.drain_to_memory(
+            streaming.bloom_bit_stream(
+                streaming.read_event_stream(spark, SF_SMOKE)
+            ),
+            "complete",
+        )[0].collect()
     )
     batch = spark.read.parquet(SF_SMOKE + "/events.parquet").select(
         "user_id", "event_type"
@@ -497,26 +550,18 @@ def test_rollup_epoch_replay_is_noop(spark, tmp_path):
     in_dir = str(tmp_path / "replay_in")
     state = str(tmp_path / "replay_state")
     _split_by_median_ts(raw, in_dir)
-    q = streaming.rollup_merge_stream(
+    streaming.drain(streaming.rollup_merge_stream(
         spark, in_dir, state, str(tmp_path / "ckpt1")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     before = {
         (r.event_date, r.event_type): (r.n_events, r.sv)
         for r in spark.read.parquet(state).collect()
     }
     # fresh checkpoint => the file source re-delivers everything with
     # epoch ids starting at 0 again: the worst-case replay storm
-    q2 = streaming.rollup_merge_stream(
+    streaming.drain(streaming.rollup_merge_stream(
         spark, in_dir, state, str(tmp_path / "ckpt2")
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    ))
     after = {
         (r.event_date, r.event_type): (r.n_events, r.sv)
         for r in spark.read.parquet(state).collect()
@@ -579,23 +624,21 @@ def test_composed_pipeline_survives_midstream_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    qs = streaming.composed_pipeline_start(spark, in_dir, root)
-    try:
-        for q in qs:
-            q.processAllAvailable()
-    finally:
-        for q in qs:
-            q.stop()
+
+    def drain_all():
+        qs = streaming.composed_pipeline_start(spark, in_dir, root)
+        try:
+            for q in qs:
+                streaming.drain(q)
+        finally:
+            for q in qs:
+                q.stop()
+
+    drain_all()
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    qs = streaming.composed_pipeline_start(spark, in_dir, root)
-    try:
-        for q in qs:
-            q.processAllAvailable()
-    finally:
-        for q in qs:
-            q.stop()
+    drain_all()
 
     got_cdc = sorted(
         tuple(r)
@@ -644,7 +687,12 @@ def test_streaming_scrub_matches_batch(spark):
 
     got = sorted(
         tuple(r)
-        for r in streaming.run_scrub_to_completion(spark, SF_SMOKE).collect()
+        for r in streaming.drain_to_memory(
+            streaming.scrub_stream(
+                streaming.read_document_stream(spark, SF_SMOKE)
+            ),
+            "append",
+        )[0].collect()
     )
     want = sorted(
         tuple(r) for r in scrub_pii(spark, SF_SMOKE).collect()
@@ -661,9 +709,6 @@ def test_streaming_minhash_index_equals_batch_pairs(spark, tmp_path):
         dedup_minhash_pairs,
     )
     from data_pipeline_and_visualization_dashboard_spark.io import read_table
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_minhash_index_to_completion,
-    )
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents", ["doc_id", "text"])
@@ -674,11 +719,13 @@ def test_streaming_minhash_index_equals_batch_pairs(spark, tmp_path):
         docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
+    work = str(tmp_path / "work")
+    streaming.drain(streaming.minhash_index_stream(
+        spark, in_dir, work + "/index", work + "/pairs", work + "/ckpt"
+    ))
     got = {
         (r.doc_id_a, r.doc_id_b, round(r.est_jaccard, 9), round(r.jaccard, 9))
-        for r in run_minhash_index_to_completion(
-            spark, in_dir, str(tmp_path / "work")
-        ).collect()
+        for r in spark.read.parquet(work + "/pairs").drop("epoch").collect()
     }
     want = {
         (r.doc_id_a, r.doc_id_b, round(r.est_jaccard, 9), round(r.jaccard, 9))
@@ -715,20 +762,17 @@ def test_streaming_minhash_index_survives_restart(spark, tmp_path):
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(
+        minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
+    )
     time.sleep(0.1)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
+    )
     got = {
         (r.doc_id_a, r.doc_id_b, round(r.jaccard, 9))
         for r in spark.read.parquet(pairs_dir).drop("epoch").collect()
@@ -751,9 +795,12 @@ def test_streaming_quality_score_equals_batch(spark):
 
     got = {
         r.doc_id: (r.token_cnt, r.score_sum, r.kept)
-        for r in streaming.run_quality_score_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.drain_to_memory(
+            streaming.quality_score_stream(
+                streaming.read_document_stream(spark, SF_SMOKE)
+            ),
+            "append",
+        )[0].collect()
     }
     want = {
         r.doc_id: (r.token_cnt, r.score_sum, r.kept)
@@ -767,15 +814,22 @@ def test_streaming_bpe_tokenize_equals_batch(spark):
     equal the batch bpe_apply row-for-row — the artifact-deploy shape:
     train offline, apply as a stateless ingest projection."""
     from data_pipeline_and_visualization_dashboard_spark.extras.bpe import (
+        _trained_merges,
         bpe_apply,
     )
     from tests.conftest import SF_SMOKE
 
+    # train on the batch corpus, then tokenize the same corpus as a
+    # stream with the trained merges
     got = {
         r.doc_id: (r.n_words, r.n_tokens)
-        for r in streaming.run_tokenize_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.drain_to_memory(
+            streaming.tokenize_stream(
+                streaming.read_document_stream(spark, SF_SMOKE),
+                _trained_merges(spark, SF_SMOKE),
+            ),
+            "append",
+        )[0].collect()
     }
     want = {
         r.doc_id: (r.n_words, r.n_tokens)
@@ -793,9 +847,6 @@ def test_streaming_postings_index_equals_batch(spark, tmp_path):
         index_postings,
     )
     from data_pipeline_and_visualization_dashboard_spark.io import read_table
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_postings_index_to_completion,
-    )
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents", ["doc_id", "text"])
@@ -804,10 +855,14 @@ def test_streaming_postings_index_equals_batch(spark, tmp_path):
         docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
+    work = str(tmp_path / "work")
+    streaming.drain(streaming.postings_index_stream(
+        spark, in_dir, work + "/index", work + "/ckpt"
+    ))
     got = {
         r.term: (r.df, r.cf, r.doc_list)
-        for r in run_postings_index_to_completion(
-            spark, in_dir, str(tmp_path / "work")
+        for r in streaming.read_postings_index(
+            spark, work + "/index"
         ).collect()
     }
     want = {
@@ -840,14 +895,10 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
         ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = hist_segments_stream(
+    streaming.drain(hist_segments_stream(
         spark, in_dir, str(tmp_path / "seg"), str(tmp_path / "ckpt"),
         lo, hi,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     merged = {
         (r.event_type, r.bin): r.cnt
         for r in read_hist_segments(spark, str(tmp_path / "seg")).collect()
@@ -895,13 +946,9 @@ def test_streaming_contamination_screen_equals_batch(spark, tmp_path):
         train.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = contamination_screen_stream(
+    streaming.drain(contamination_screen_stream(
         spark, in_dir, eval_sh, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     got = {
         r.doc_id: (r.n_shingles, r.n_overlap, r.is_contaminated)
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -938,20 +985,13 @@ def test_streaming_postings_index_survives_restart(spark, tmp_path):
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     time.sleep(0.1)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     got = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -996,20 +1036,17 @@ def test_streaming_ivf_assign_survives_restart(spark, tmp_path):
     emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(
+        ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
+    )
     time.sleep(0.1)
     emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
+    )
     got = {
         (r.c_id, r.centroid_id)
         for r in read_ivf_assign(spark, index_dir).collect()
@@ -1048,11 +1085,7 @@ def test_postings_compaction_preserves_index_and_ingest(spark, tmp_path):
         docs.filter(F.col("doc_id") % 4 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     before = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1075,11 +1108,7 @@ def test_postings_compaction_preserves_index_and_ingest(spark, tmp_path):
     docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     got = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1116,11 +1145,7 @@ def test_postings_compaction_recovers_interrupted_run(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     before = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1176,11 +1201,7 @@ def test_postings_compaction_rolls_forward_after_install(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     # keep a pre-fold copy of the base victim to stage the crash state
     stale = str(tmp_path / "stale_epoch0")
     shutil.copytree(os.path.join(seg_dir, "epoch=0"), stale)
@@ -1225,13 +1246,13 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
     )
     in_dir = str(tmp_path / "cdc_in")
     work = str(tmp_path / "sd")
+    sd = [work + "/state", work + "/deltas", work + "/ckpt"]
     # phase 1: snapshot A seeds the state (one epoch, all 'added')
     prev.selectExpr(
         "0L AS seq", "doc_id", "text", "'upsert' AS op"
     ).coalesce(1).write.parquet(in_dir, mode="append")
-    seeded = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    streaming.drain(streaming.snapshot_diff_stream(spark, in_dir, *sd))
+    seeded = streaming.read_snapshot_deltas(spark, sd[1])
     m0 = seeded.agg(F.max("epoch")).first()[0]
     assert seeded.filter(
         (F.col("epoch") <= m0) & (F.col("status") != "added")
@@ -1248,9 +1269,8 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
         "2L AS seq", "doc_id", "CAST(NULL AS STRING) AS text",
         "'delete' AS op",
     ).coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    streaming.drain(streaming.snapshot_diff_stream(spark, in_dir, *sd))
+    ledger = streaming.read_snapshot_deltas(spark, sd[1])
     got = {
         r.status: (r.n_docs, r.n_chars)
         for r in ledger.filter(F.col("epoch") > m0)
@@ -1282,9 +1302,8 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
     )
     assert state == want_state
     # idempotence: draining again with no new input changes nothing
-    again = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    streaming.drain(streaming.snapshot_diff_stream(spark, in_dir, *sd))
+    again = streaming.read_snapshot_deltas(spark, sd[1])
     assert sorted(map(tuple, again.collect())) == sorted(
         map(tuple, ledger.collect())
     )
@@ -1301,6 +1320,7 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
 
     in_dir = str(tmp_path / "cdc_in")
     work = str(tmp_path / "sd")
+    sd = [work + "/state", work + "/deltas", work + "/ckpt"]
     b1 = spark.createDataFrame(
         [
             (0, 1, None, "upsert"),   # NULL text -> NULL hash state
@@ -1311,7 +1331,7 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
         "seq long, doc_id long, text string, op string",
     )
     b1.coalesce(1).write.parquet(in_dir, mode="append")
-    streaming.run_snapshot_diff_to_completion(spark, in_dir, work)
+    streaming.drain(streaming.snapshot_diff_stream(spark, in_dir, *sd))
     b2 = spark.createDataFrame(
         [
             (1, 1, "xx", "upsert"),   # NULL -> text   => changed
@@ -1328,9 +1348,8 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
         "seq long, doc_id long, text string, op string",
     )
     b2.coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    streaming.drain(streaming.snapshot_diff_stream(spark, in_dir, *sd))
+    ledger = streaming.read_snapshot_deltas(spark, sd[1])
     m = {
         (r.epoch, r.status): (r.n_docs, r.n_chars)
         for r in ledger.collect()
@@ -1393,8 +1412,11 @@ def test_stream_stream_left_join_matches_batch(spark, tmp_path):
             "    THEN INTERVAL 1 HOURS ELSE INTERVAL 0 HOURS END)"
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
-    out = streaming.run_view_purchase_left_join_to_completion(
-        spark, in_dir
+    out, _ = streaming.drain_to_memory(
+        streaming.view_purchase_left_join_stream(
+            streaming.read_event_files(spark, in_dir)
+        ),
+        "append",
     )
     streamed = {
         (r.user_id, r.view_id, r.purchase_id)
@@ -1434,7 +1456,10 @@ def test_transition_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "tr_in")
     _split_by_median_ts(raw, in_dir)
-    pairs = streaming.run_transitions_to_completion(spark, in_dir)
+    pairs, _ = streaming.drain_to_memory(
+        streaming.transition_stream(streaming.read_event_files(spark, in_dir)),
+        "append",
+    )
     got = {
         (r.from_type, r.to_type): r.n
         for r in pairs.groupBy("from_type", "to_type")
@@ -1465,7 +1490,10 @@ def test_last_touch_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "lt_in")
     _split_by_median_ts(raw, in_dir)
-    credits = streaming.run_last_touch_to_completion(spark, in_dir)
+    credits, _ = streaming.drain_to_memory(
+        streaming.last_touch_stream(streaming.read_event_files(spark, in_dir)),
+        "append",
+    )
     got = sorted(
         map(tuple, streaming.last_touch_rollup(credits).collect())
     )
@@ -1518,7 +1546,12 @@ def test_linear_attribution_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "la_in")
     _split_by_median_ts(raw, in_dir)
-    credits = streaming.run_linear_attr_to_completion(spark, in_dir)
+    credits, _ = streaming.drain_to_memory(
+        streaming.linear_attribution_stream(
+            streaming.read_event_files(spark, in_dir)
+        ),
+        "append",
+    )
     rows = streaming.linear_attr_rollup(credits).collect()
     _assert_linear_attr_parity(spark, rows, _SF)
 
@@ -1542,32 +1575,14 @@ def test_linear_attribution_stream_survives_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.linear_attribution_stream(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.linear_attribution_stream(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     rows = streaming.linear_attr_rollup(
         spark.read.parquet(out_dir)
     ).collect()
@@ -1599,32 +1614,14 @@ def test_bounded_last_touch_survives_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.last_touch_stream_bounded(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.last_touch_stream_bounded(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = sorted(
         map(
             tuple,
@@ -1688,31 +1685,16 @@ def test_bounded_last_touch_evicts_idle_user(spark, tmp_path):
             "event_type", "value", "CAST(NULL AS string) AS props",
         ).coalesce(1).write.parquet(in_dir, mode="append")
 
-    def run(builder, name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            builder(ev)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sorted(
+    ev = streaming.read_event_files(spark, in_dir)
+    bounded, exact = (
+        sorted(
             (r.user_id, r.channel)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
+            for r in streaming.drain_to_memory(fold(ev), "append")[0].collect()
         )
-
-    bounded = run(streaming.last_touch_stream_bounded, "lt_evict_b")
-    exact = run(streaming.last_touch_stream, "lt_evict_e")
+        for fold in (
+            streaming.last_touch_stream_bounded, streaming.last_touch_stream
+        )
+    )
     # exact twin: no eviction ever — both users keep their touch
     assert exact == [(100, "click"), (300, "click"), (300, "click")]
     # bounded: idle A evicted -> '(none)'; actively-purchasing C's
@@ -1780,31 +1762,16 @@ def test_attribution_null_type_and_late_touch(spark, tmp_path):
         "event_type", "value", "CAST(NULL AS string) AS props",
     ).coalesce(1).write.parquet(batch_dir + "/events.parquet")
 
-    def run(builder, name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        # huge watermark delay: the late wave must reach the fold
-        # (this test pins FOLD semantics, not watermark dropping)
-        q = (
-            builder(ev, watermark="3650 days")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {name}")
+    ev = streaming.read_event_files(spark, in_dir)
+    # huge watermark delay: the late wave must reach the fold
+    # (this test pins FOLD semantics, not watermark dropping)
+    wm = "3650 days"
 
     # --- last-touch: stream rollup == batch q98, and A credits click
     lt = streaming.last_touch_rollup(
-        run(streaming.last_touch_stream, "attr_lt")
+        streaming.drain_to_memory(
+            streaming.last_touch_stream(ev, watermark=wm), "append"
+        )[0]
     ).collect()
     q98 = q98_last_touch_attribution(spark, batch_dir).collect()
     assert sorted(map(tuple, lt)) == sorted(map(tuple, q98))
@@ -1815,7 +1782,9 @@ def test_attribution_null_type_and_late_touch(spark, tmp_path):
     # --- linear: stream rollup == batch q99 (0-credit channels may
     # appear batch-side only — none here), NULL row in no bucket
     la = streaming.linear_attr_rollup(
-        run(streaming.linear_attribution_stream, "attr_la")
+        streaming.drain_to_memory(
+            streaming.linear_attribution_stream(ev, watermark=wm), "append"
+        )[0]
     ).collect()
     q99 = q99_linear_attribution(spark, batch_dir).collect()
     assert sorted((r.channel, r.attributed_revenue) for r in la) == sorted(
@@ -1901,32 +1870,12 @@ def test_transition_stream_survives_restart(spark, tmp_path):
     )
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.transition_stream(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(streaming.transition_stream(ev), out_dir, ckpt)
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = {
         (r.from_type, r.to_type): r.n
         for r in spark.read.parquet(out_dir)
@@ -1987,36 +1936,20 @@ def test_streaming_dedup_survives_restart(spark, tmp_path):
     )
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.dedup_event_stream(ev, watermark="3650 days")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.dedup_event_stream(ev, watermark="3650 days"),
+            out_dir,
+            ckpt,
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     # wave 3 (post-restart): the remaining ids PLUS re-copies of ids
     # the stream deduped BEFORE the stop
     raw.filter("event_id >= 700 OR event_id < 300").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     out = spark.read.parquet(out_dir)
     n_all = read_table(spark, SF_SMOKE, "events").count()
     assert out.count() == n_all  # every id exactly once, dupes dropped
@@ -2043,33 +1976,13 @@ def test_stateful_sessionization_survives_restart(spark, tmp_path):
     _, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.sessionize_stream(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(streaming.sessionize_stream(ev), out_dir, ckpt)
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in spark.read.parquet(out_dir).collect()
@@ -2146,32 +2059,14 @@ def test_stream_stream_join_survives_restart(spark, tmp_path):
     raw.filter(us <= t2).coalesce(1).write.parquet(in_dir, mode="append")
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.view_purchase_join_stream(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.view_purchase_join_stream(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.purchase_id, r.view_id)
         for r in spark.read.parquet(out_dir).collect()
@@ -2210,26 +2105,12 @@ def test_stream_stream_left_join_survives_restart(spark, tmp_path):
     _, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.view_purchase_left_join_stream(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.view_purchase_left_join_stream(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     # post-restart input: the final wave + the sentinel flush batches
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
@@ -2252,11 +2133,7 @@ def test_stream_stream_left_join_survives_restart(spark, tmp_path):
             "    THEN INTERVAL 1 HOURS ELSE INTERVAL 0 HOURS END)"
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.view_id, r.purchase_id)
         for r in spark.read.parquet(out_dir).collect()
@@ -2295,30 +2172,15 @@ def test_bounded_dedup_matches_batch_and_evicts_state(spark, tmp_path):
         in_dir, mode="append"
     )
 
-    def run(watermark, query_name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            streaming.dedup_event_stream_bounded(ev, watermark=watermark)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {query_name}"), state_rows
+    ev = streaming.read_event_files(spark, in_dir)
 
     # (a) watermark >> input span: exact-distinct parity, every id
     # still in state (nothing evictable yet)
-    out, state_wide = run("3650 days", "bdedup_wide")
+    out, prog = streaming.drain_to_memory(
+        streaming.dedup_event_stream_bounded(ev, watermark="3650 days"),
+        "append",
+    )
+    state_wide = streaming.state_rows(prog)
     assert out.count() == n_all
     assert out.select("event_id").distinct().count() == n_all
     assert state_wide == n_all
@@ -2326,7 +2188,11 @@ def test_bounded_dedup_matches_batch_and_evicts_state(spark, tmp_path):
     # THIS input (the redelivered batch shares the original event
     # times, so dupes are either in-horizon-deduped or late-dropped),
     # and end-of-stream state is a fraction of the id domain
-    out2, state_narrow = run("10 minutes", "bdedup_narrow")
+    out2, prog = streaming.drain_to_memory(
+        streaming.dedup_event_stream_bounded(ev, watermark="10 minutes"),
+        "append",
+    )
+    state_narrow = streaming.state_rows(prog)
     assert out2.select("event_id").distinct().count() == out2.count()
     assert state_narrow < n_all / 2
 
@@ -2365,27 +2231,16 @@ def test_timeout_sessionization_full_batch_parity_and_eviction(
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
 
-    raw_s = (
-        spark.readStream.schema(streaming._STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    out, prog = streaming.drain_to_memory(
+        streaming.sessionize_stream_timeout(
+            streaming.read_event_files(spark, in_dir)
+        ),
+        "append",
     )
-    ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        streaming.sessionize_stream_timeout(ev)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_timeout_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-    finally:
-        q.stop()
+    state_rows = streaming.state_rows(prog)
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sess_timeout_out").collect()
+        for r in out.collect()
         if r.user_id >= 0  # drop the sentinels' own sessions
     }
     # FULL batch oracle — no open-session subtraction
@@ -2439,26 +2294,12 @@ def test_timeout_sessionization_survives_restart(spark, tmp_path):
     _, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.sessionize_stream_timeout(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.sessionize_stream_timeout(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
     base = raw.select(
@@ -2474,11 +2315,7 @@ def test_timeout_sessionization_survives_restart(spark, tmp_path):
             f"CAST(timestamp'{base}' + (INTERVAL {off_days} DAYS)"
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in spark.read.parquet(out_dir).collect()
@@ -2526,28 +2363,12 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     _split_by_median_ts(raw, in_dir)
 
-    def run(d, query_name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            streaming.transition_stream_bounded(ev)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {query_name}"), state_rows
-
-    out, _ = run(in_dir, "btrans_real")
+    out, _ = streaming.drain_to_memory(
+        streaming.transition_stream_bounded(
+            streaming.read_event_files(spark, in_dir)
+        ),
+        "append",
+    )
     got = {
         (r.from_type, r.to_type): r.n
         for r in out.groupBy("from_type", "to_type")
@@ -2603,25 +2424,19 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
 
     for batch in waves:
         land(batch)
-    raw_s = (
-        spark.readStream.schema(streaming._STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(syn)
-    )
-    ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
     q = (
-        streaming.transition_stream_bounded(ev)
+        streaming.transition_stream_bounded(
+            streaming.read_event_files(spark, syn)
+        )
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("btrans_syn")
         .start()
     )
     try:
-        q.processAllAvailable()  # drains files 1-2 + the no-data
-        # batch that evicts user 1 at +30d1h
+        _settle(q)  # files 1-2 + the no-data batch that evicts user 1
         land(wave3)
-        q.processAllAvailable()
-        state2 = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        state2 = streaming.state_rows(streaming.drain(q))
     finally:
         q.stop()
     pairs = {
@@ -2680,8 +2495,9 @@ def test_session_fold_extends_start_backward_in_gap(spark, tmp_path):
     wave([(3, "2024-01-01 09:58:00")], 20)
     wave([(4, "2024-01-01 11:00:00")], 30)  # > last+30min: closes
 
-    out = streaming.run_sessionize_to_completion(
-        spark, in_dir, query_name="backfill_sessions"
+    out, _ = streaming.drain_to_memory(
+        streaming.sessionize_stream(streaming.read_event_files(spark, in_dir)),
+        "append",
     )
     closed = {
         (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
@@ -2718,32 +2534,14 @@ def test_bounded_transitions_survive_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.transition_stream_bounded(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+        ev = streaming.read_event_files(spark, in_dir)
+        return _file_sink(
+            streaming.transition_stream_bounded(ev), out_dir, ckpt
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = {
         (r.from_type, r.to_type): r.n
         for r in spark.read.parquet(out_dir)
@@ -2767,9 +2565,11 @@ def test_streaming_ams_f2_matches_batch_with_one_state_row(spark):
     state row regardless of key cardinality (state honesty rule)."""
     from data_pipeline_and_visualization_dashboard_spark.extras.sketches import AMS_R, ams_f2
 
-    out, state_rows = streaming.run_ams_stream_to_completion(
-        spark, SF_SMOKE
+    out, prog = streaming.drain_to_memory(
+        streaming.ams_f2_stream(streaming.read_event_stream(spark, SF_SMOKE)),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     row = out.collect()
     assert len(row) == 1
     row = row[0]
@@ -2850,22 +2650,14 @@ def test_streaming_ams_f2_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.ams_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.ams_merge_stream(spark, in_dir, state, ckpt))
     # the first wave alone must differ from the full answer, or the
     # recovery assertion below would be vacuous
     wave1 = spark.read.parquet(state).first()
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.ams_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.ams_merge_stream(spark, in_dir, state, ckpt))
     got = spark.read.parquet(state).first()
     # batch parity oracle: the SAME plan fragment over a batch read of
     # the full fixture (the established stream-twin convention)
@@ -2899,9 +2691,15 @@ def test_streaming_hhi_matches_batch_with_one_state_row(spark):
         ams_hhi,
     )
 
-    out, state_rows = streaming.run_hhi_stream_to_completion(
-        spark, SF_SMOKE
+    orders = (
+        spark.readStream.schema(streaming._ORDERS_STREAM_SCHEMA)
+        .option("pathGlobFilter", "orders.parquet")
+        .parquet(SF_SMOKE)
     )
+    out, prog = streaming.drain_to_memory(
+        streaming.hhi_ams_stream(orders), "complete"
+    )
+    state_rows = streaming.state_rows(prog)
     rows = out.collect()
     assert len(rows) == 1
     row = rows[0]
@@ -2971,20 +2769,12 @@ def test_streaming_hhi_survives_restart(spark, tmp_path):
     raw.filter("o_orderkey % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.hhi_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.hhi_merge_stream(spark, in_dir, state, ckpt))
     wave1 = spark.read.parquet(state).first()
     raw.filter("o_orderkey % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.hhi_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.hhi_merge_stream(spark, in_dir, state, ckpt))
     got = spark.read.parquet(state).first()
     want = streaming.hhi_ams_stream(raw).first()
     assert [got[f"S_{r}"] for r in range(AMS_R)] == [
@@ -3030,9 +2820,13 @@ def test_streaming_countmin_matches_batch_with_bounded_state(spark):
         countmin_sketch,
     )
 
-    out, state_rows = streaming.run_countmin_stream_to_completion(
-        spark, SF_SMOKE
+    out, prog = streaming.drain_to_memory(
+        streaming.countmin_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE)
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     got = {(r.d, r.w): r.cnt for r in out.collect()}
     want = {
         (r.d, r.w): r.cnt
@@ -3061,22 +2855,18 @@ def test_streaming_countmin_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
+    )
     wave1 = {
         (r.d, r.w): r.cnt for r in spark.read.parquet(state).collect()
     }
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
+    )
     got = {
         (r.d, r.w): r.cnt for r in spark.read.parquet(state).collect()
     }
@@ -3107,9 +2897,13 @@ def test_streaming_hist_matches_batch_with_bounded_state(spark):
 
     batch_cells = hist_cells(spark, SF_SMOKE).collect()
     lo, hi = batch_cells[0].lo, batch_cells[0].hi
-    out, state_rows = streaming.run_hist_stream_to_completion(
-        spark, SF_SMOKE, lo, hi
+    out, prog = streaming.drain_to_memory(
+        streaming.hist_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE), lo, hi
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     got = {(r.event_type, r.bin): r.cnt for r in out.collect()}
     want = {(r.event_type, r.bin): r.cnt for r in batch_cells}
     assert got == want and len(got) > 0
@@ -3150,11 +2944,9 @@ def test_streaming_hist_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
     wave1 = {
         (r.event_type, r.bin): r.cnt
         for r in spark.read.parquet(state).collect()
@@ -3162,11 +2954,9 @@ def test_streaming_hist_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
     got = {
         (r.event_type, r.bin): r.cnt
         for r in spark.read.parquet(state).collect()
@@ -3193,9 +2983,13 @@ def test_streaming_hll_matches_batch_with_bounded_state(spark):
         hll_registers,
     )
 
-    out, state_rows = streaming.run_hll_stream_to_completion(
-        spark, SF_SMOKE
+    out, prog = streaming.drain_to_memory(
+        streaming.hll_register_stream(
+            streaming.read_event_stream(spark, SF_SMOKE)
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     got = {r.bucket: r.max_rank for r in out.collect()}
     want = {
         r.bucket: r.max_rank
@@ -3270,20 +3064,12 @@ def test_streaming_hll_survives_restart(spark, tmp_path):
         F.col("user_id").isNull() | (F.col("user_id") != champion)
     )
     a.coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.hll_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.hll_merge_stream(spark, in_dir, state, ckpt))
     wave1 = {
         r.bucket: r.max_rank for r in spark.read.parquet(state).collect()
     }
     b.coalesce(1).write.parquet(in_dir, mode="append")
-    q2 = streaming.hll_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.hll_merge_stream(spark, in_dir, state, ckpt))
     got = {
         r.bucket: r.max_rank for r in spark.read.parquet(state).collect()
     }
@@ -3316,17 +3102,13 @@ def test_streaming_hist_domain_guards(spark, tmp_path):
     state = str(tmp_path / "hd_state")
     ckpt = str(tmp_path / "hd_ckpt")
     events.limit(50).coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
+    )
     # same domain resumes fine
-    q2 = streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
+    )
     # different domain refused BEFORE any state is touched
     with pytest.raises(ValueError, match="only meaningful under"):
         streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 20.0)
@@ -3371,9 +3153,13 @@ def test_streaming_bloom_matches_batch_with_bounded_state(spark):
     from pyspark.sql import functions as F
 
     MB = 256
-    out, state_rows = streaming.run_bloom_cells_to_completion(
-        spark, SF_SMOKE, MB
+    out, prog = streaming.drain_to_memory(
+        streaming.bloom_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE), MB
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     events = spark.read.parquet(SF_SMOKE + "/events.parquet")
     want = {
         r.bit: r.cnt
@@ -3421,20 +3207,16 @@ def test_streaming_bloom_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
+    )
     wave1 = {r.bit: r.cnt for r in spark.read.parquet(state).collect()}
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
+    )
     got = {r.bit: r.cnt for r in spark.read.parquet(state).collect()}
     want = {
         r.bit: r.cnt
@@ -3468,17 +3250,13 @@ def test_streaming_bloom_width_guard(spark, tmp_path):
     state = str(tmp_path / "bw_state")
     ckpt = str(tmp_path / "bw_ckpt")
     events.limit(50).coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
+    )
     # same width resumes fine
-    q2 = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
+    )
     # different width refused BEFORE any state is touched
     with pytest.raises(ValueError, match="only meaningful under"):
         streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 512)
@@ -3502,9 +3280,13 @@ def test_streaming_cm_join_matches_batch_with_bounded_state(spark):
         cm_join_card,
     )
 
-    out, state_rows = streaming.run_cm_join_stream_to_completion(
-        spark, SF_SMOKE
+    out, prog = streaming.drain_to_memory(
+        streaming.cm_join_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE)
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     got = streaming.cm_join_est_from_cells(out).collect()[0]
     want = cm_join_card(spark, SF_SMOKE).collect()[0]
     assert (got.rows_a, got.rows_b, got.est_join_rows) == (
@@ -3536,22 +3318,14 @@ def test_streaming_cm_join_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.cm_join_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.cm_join_merge_stream(spark, in_dir, state, ckpt))
     wave1 = streaming.cm_join_est_from_cells(
         spark.read.parquet(state)
     ).collect()[0]
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.cm_join_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.cm_join_merge_stream(spark, in_dir, state, ckpt))
     got = streaming.cm_join_est_from_cells(
         spark.read.parquet(state)
     ).collect()[0]
@@ -3577,9 +3351,9 @@ def test_streaming_bloom_null_key_no_false_negative(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # the run-to-completion harness globs literal events.parquet FILES
-    # (the driver testdata layout), so write the fixture as one file
-    # via pyarrow rather than a Spark part-file directory
+    # read_event_stream globs literal events.parquet FILES (the driver
+    # testdata layout), so write the fixture as one file via pyarrow
+    # rather than a Spark part-file directory
     t = pa.table({
         "event_id": pa.array([1, 2], pa.int64()),
         "ts": pa.array(
@@ -3595,9 +3369,13 @@ def test_streaming_bloom_null_key_no_false_negative(spark, tmp_path):
     in_dir = str(tmp_path / "bn_in")
     os.makedirs(in_dir)
     pq.write_table(t, in_dir + "/events.parquet")
-    out, state_rows = streaming.run_bloom_cells_to_completion(
-        spark, in_dir, 256
+    out, prog = streaming.drain_to_memory(
+        streaming.bloom_cell_stream(
+            streaming.read_event_stream(spark, in_dir), 256
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(prog)
     # the NULL key lands exactly one (bit NULL) cell
     assert sum(1 for r in out.collect() if r.bit is None) == 1
     assert state_rows <= 256 + 1
@@ -3647,23 +3425,21 @@ def test_shard_manifest_stream_matches_batch_and_merges(spark, tmp_path):
 
     q = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
     try:
-        q.processAllAvailable()
+        _settle(q)
         assert snap() == sorted(
             map(tuple, shard_manifest_of(half).collect())
         )  # prefix state == prefix manifest
         rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
+        streaming.drain(q)
     finally:
         q.stop()
     want = sorted(map(tuple, shard_manifest_of(docs).collect()))
     assert snap() == want and len(want) > 0
 
     # restart on the same checkpoint: no new input -> state unchanged
-    q2 = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
     assert snap() == want
 
 
@@ -3727,23 +3503,21 @@ def test_data_card_stream_matches_batch_and_restarts(spark, tmp_path):
 
     q = streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
     try:
-        q.processAllAvailable()
+        _settle(q)
         assert snap() == sorted(
             map(tuple, data_card_of(half, groups).collect())
         )  # prefix state == prefix card
         rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
+        streaming.drain(q)
     finally:
         q.stop()
     want = sorted(map(tuple, data_card_of(docs, groups).collect()))
     assert snap() == want and len(want) > 0
 
     # restart on the same checkpoint: no new input -> state unchanged
-    q2 = streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
+    )
     assert snap() == want
 
     # LIVE mixture readout (r16): read_mixture_plan_state over the
@@ -3782,9 +3556,6 @@ def test_data_card_state_merges_across_streams(spark, tmp_path):
     from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
         cluster_table, data_card_of,
     )
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_data_card_to_completion,
-    )
 
     docs = spark.read.parquet(SF_SMOKE + "/documents.parquet")
     groups = cluster_table(spark, SF_SMOKE)
@@ -3795,9 +3566,9 @@ def test_data_card_state_merges_across_streams(spark, tmp_path):
         in_dir = str(tmp_path / f"in_{name}")
         st = str(tmp_path / f"state_{name}")
         side.coalesce(1).write.parquet(in_dir, mode="append")
-        run_data_card_to_completion(
+        streaming.drain(streaming.data_card_stream(
             spark, in_dir, st, str(tmp_path / f"ckpt_{name}"), groups
-        )
+        ))
         states.append(spark.read.parquet(st))
     merged_dir = str(tmp_path / "state_merged")
     (
@@ -3842,7 +3613,7 @@ def test_publish_lag_readout(spark, tmp_path):
     half.coalesce(1).write.parquet(in_dir, mode="append")
     q = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
     try:
-        q.processAllAvailable()
+        _settle(q)
         # snapshot the published manifest as literal rows: the state
         # dir is atomically swapped by later commits, so a lazy frame
         # over it would silently read wave-2 state
@@ -3859,7 +3630,7 @@ def test_publish_lag_readout(spark, tmp_path):
             not r.needs_rewrite and r.docs_delta == 0 for r in zero
         )
         rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
+        streaming.drain(q)
     finally:
         q.stop()
     lag = {
