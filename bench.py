@@ -477,7 +477,8 @@ def inline_queries_subset(timings: dict, budget_chars: int = 1150) -> dict:
     this run's draws, so membership is identical across runs and core
     counts and the driver's 32-core/low-core scaling pass can
     intersect the two maps) until a fixed per-entry byte estimate
-    exhausts the budget.  The complete map still lands in
+    exhausts the budget, then trimmed to the budget by its serialized
+    size.  The complete map still lands in
     BENCH_full.json / the committed round archives; this inline slice
     restores per-query + scaling visibility to PERF for the queries
     that carry the fleet's cost mass."""
@@ -499,6 +500,11 @@ def inline_queries_subset(timings: dict, budget_chars: int = 1150) -> dict:
             continue  # shorter names later may still fit
         used += cost
         out[q] = timings[q]
+    # a value wider than the estimate (>= 1000 s, or a long float repr)
+    # can push the real line past the budget: drop the fastest-floor
+    # entries until it fits, so membership changes only then
+    while len(json.dumps(out, separators=(",", ":"))) > budget_chars:
+        out.popitem()
     return out
 
 

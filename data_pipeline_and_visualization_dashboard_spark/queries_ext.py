@@ -1031,6 +1031,15 @@ def _unit(vec: list[float]) -> list[float]:
     return [x / nrm for x in vec]
 
 
+def _require_dense(n_sparse: int) -> None:
+    """k-means needs every embedding element: raise on NULL ones."""
+    if n_sparse:
+        raise ValueError(
+            f"embeddings: {n_sparse} vectors are NULL or hold NULL "
+            "elements; k-means training needs dense vectors"
+        )
+
+
 def _centroid_sim_structs(centroids: list[tuple[int, list[float]]]):
     """Array of (dot(e, unit_centroid), -centroid_id) structs over a
     bound `ev` column. Centroids are UNIT vectors baked in as literals,
@@ -1123,11 +1132,12 @@ def train_centroids(
         epath, columns=["vec_id", "embedding"],
         filters=[("vec_id", "in", init_ids)],
     ).to_pylist()
+    seeds = sorted(seed_tbl, key=lambda r: r["vec_id"])
+    _require_dense(sum(r["embedding"] is None or None in r["embedding"]
+                       for r in seeds))
     centroids = [
         (cid, _unit([float(x) for x in r["embedding"]]))
-        for cid, r in enumerate(
-            sorted(seed_tbl, key=lambda r: r["vec_id"])
-        )
+        for cid, r in enumerate(seeds)
     ]
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     dim = len(centroids[0][1])
@@ -1143,6 +1153,11 @@ def train_centroids(
         + ",".join(f"sum(element_at(ev, {p + 1}))" for p in range(dim))
         + ")"
     ).alias("s")
+    # sum() skips a NULL element while c counts its row, so a vector
+    # with one would skew its centroid's mean; counted in the same pass
+    n_sparse = F.count_if(
+        F.col("ev").isNull() | F.exists("ev", lambda x: x.isNull())
+    ).alias("n_sparse")
     for _ in range(iters):
         best = F.array_max(_centroid_sim_structs(centroids))
         assigned = bound.select(
@@ -1150,9 +1165,10 @@ def train_centroids(
         )
         sums = (
             assigned.groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("c"), sum_arr)
+            .agg(F.count(F.lit(1)).alias("c"), sum_arr, n_sparse)
             .collect()
         )
+        _require_dense(sum(r["n_sparse"] for r in sums))
         centroids = [
             (
                 int(r["centroid_id"]),

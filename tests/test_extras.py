@@ -891,6 +891,31 @@ def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
     }
     assert x == {(a, n) for (a, n, *_rest) in s}
 
+
+@pytest.mark.parametrize("row", [1, 0], ids=["m_step", "init_seed"])
+def test_train_centroids_rejects_null_elements(spark, tmp_path, row):
+    """A NULL embedding element is skipped by the M-step's per-dim sums
+    but counted in the row count that divides them, so k-means training
+    raises on it instead of returning skewed centroids (row 0 is also
+    an init seed, read on the driver)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        train_centroids,
+    )
+
+    tbl = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    vecs = tbl.column("embedding").to_pylist()
+    vecs[row][3] = None
+    col = tbl.schema.get_field_index("embedding")
+    tbl = tbl.set_column(col, tbl.schema.field(col),
+                         pa.array(vecs, tbl.schema.field(col).type))
+    pq.write_table(tbl, tmp_path / "embeddings.parquet")
+    with pytest.raises(ValueError, match="NULL elements"):
+        train_centroids(spark, str(tmp_path), iters=1)
+
+
 def test_pretrained_ivf_serving_equals_retrained(spark):
     """The cached-index serving paths must return exactly what the
     self-training variants return (training is deterministic — only

@@ -629,6 +629,23 @@ def test_inline_queries_subset(tmp_path):
     assert slowest in sub
 
 
+def test_inline_queries_subset_fits_wide_timings():
+    """A timing of 1000 s or more serializes wider than the 7 chars the
+    membership pass reserves per value; the slice is still cut to the
+    budget by its real serialized size, dropping the fastest floors."""
+    import json
+
+    import bench
+
+    narrow = bench.inline_queries_subset({q: 9.999 for q in bench.HEADLINE})
+    timings = {q: 1234.567 for q in bench.HEADLINE}
+    sub = bench.inline_queries_subset(timings)
+    assert len(json.dumps(sub, separators=(",", ":"))) <= 1150
+    assert 0 < len(sub) < len(narrow)
+    # what is kept is the slowest-floor prefix of the narrow slice
+    assert list(sub) == list(narrow)[:len(sub)]
+
+
 def test_parse_round_arg_branches():
     """bench._parse_round_arg (ADVICE r9 #1): every branch — env,
     flag, flag-overrides-env, absent, and the two fail-fast malformed
